@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: every CPU this
+process may run on). Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
  "sf": ..., "docs_per_sec": ..., "media_spans_per_sec": ...}.
 
@@ -20,7 +21,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     import __spark_entry__ as entry

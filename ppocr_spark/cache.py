@@ -18,6 +18,10 @@ to recomputation, values are unchanged.
 Self-joins whose two sides are the IDENTICAL subtree do not need this at
 all — Spark deduplicates the shuffle via ReusedExchange (one compute, no
 cache) — so only multi-shape reuse sites use ``track``.
+
+Iterative loops cut their lineage with ``checkpoint(df)`` (an eager
+``localCheckpoint``), registered the same way. A checkpoint has no
+lineage to fall back to, so release it only after the consuming action.
 """
 
 from __future__ import annotations
@@ -25,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+#: JVM RDDs holding ``checkpoint`` blocks, by RDD id
+_CHECKPOINTS: dict = {}
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -35,9 +41,10 @@ def track(df: DataFrame) -> DataFrame:
 
 
 def release_all(blocking: bool = False) -> int:
-    """Unpersist every tracked DataFrame; returns how many were released.
-    Safe to call repeatedly and while returned plans are still live (they
-    recompute instead of reading cache)."""
+    """Unpersist every tracked DataFrame and checkpoint; returns how many
+    were released. Safe to call repeatedly and while returned plans are
+    still live (they recompute instead of reading cache) — except plans
+    that read a ``checkpoint``, which cannot recompute."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
@@ -46,7 +53,36 @@ def release_all(blocking: bool = False) -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
+    while _CHECKPOINTS:
+        _, rdd = _CHECKPOINTS.popitem()
+        try:
+            rdd.unpersist(blocking)
+            n += 1
+        except Exception:
+            pass  # session already stopped — nothing to release
     return n
+
+
+def checkpoint(df: DataFrame, supersedes: DataFrame | None = None) -> DataFrame:
+    """Eager ``df.localCheckpoint()``, registered for ``release_all()``.
+    Unregistered, its blocks stay in executor storage until the JVM
+    garbage-collects the plan, so a long session accumulates them.
+    ``supersedes``: an earlier ``checkpoint`` result that the new one no
+    longer reads (the previous round of the same loop); it is released
+    now, since the new checkpoint already cut the lineage to it."""
+    out = df.localCheckpoint()
+    rdd = _checkpoint_rdd(out)
+    _CHECKPOINTS[rdd.id()] = rdd
+    if supersedes is not None:
+        old = _checkpoint_rdd(supersedes)
+        old.unpersist(False)
+        _CHECKPOINTS.pop(old.id(), None)
+    return out
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a ``localCheckpoint`` result (its LogicalRDD)."""
+    return df._jdf.queryExecution().analyzed().rdd()
 
 
 def track_if_large(
@@ -71,14 +107,13 @@ def track_if_large(
 def plan_size_bytes(df: DataFrame, default: int = 1 << 62) -> int:
     """Catalyst's optimizer size estimate for ``df`` (for a parquet scan:
     the file-size sum after partition pruning). ``default`` is returned
-    when stats are unavailable — callers pick the scale-safe side."""
+    when stats are unavailable — callers pick the scale-safe side.
+
+    ``sizeInBytes`` is a Scala BigInt; py4j hands it over either as a
+    Python int or as a JVM object, and ``str`` reads both."""
     try:
         return int(
-            df._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-            .toString()
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:  # noqa: BLE001 — py4j/stats failure
         return default

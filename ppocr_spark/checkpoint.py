@@ -45,6 +45,8 @@ MANIFEST_COLS = [
     # task retry/speculation (see make_stage_metrics) — run_*_ms is
     # attribution, not an audited total; span_count/ok_span_count above
     # ARE exact (derived from the written results, not accumulators).
+    # run_*_ms sums stage time once per computed (payload, page);
+    # run_ocr_spans counts answered span requests (make_stage_metrics).
     "run_decode_ms",
     "run_det_ms",
     "run_crop_ms",

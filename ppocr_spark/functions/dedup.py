@@ -631,20 +631,21 @@ def connected_components(
     self row), so the convergence check is a filter+count on the
     checkpointed result, not a third join — and (2) the pointer-jump
     self-join. No driver-side data beyond a changed-row count; lineage is
-    cut every round with localCheckpoint so the plan does not double per
-    iteration. At 100 TB the edge list persists across rounds and every
-    join is a plain equi-join — no broadcast of anything unbounded.
+    cut every round with ``cache.checkpoint`` (the previous round's blocks
+    are freed at once, the last round's by ``cache.release_all``) so the
+    plan does not double per iteration. At 100 TB the edge list persists
+    across rounds and every join is a plain equi-join — no broadcast of
+    anything unbounded.
     """
     edges = cache.track(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .union(pairs.select(F.col(b_col).alias("u"),
                             F.col(a_col).alias("v")))
     )
-    labels = (
+    ckpt = labels = cache.checkpoint(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         # adjacency ∪ tagged self-loops: min(vlab) = least(own label,
@@ -669,7 +670,7 @@ def connected_components(
             )
             .select(F.col("u").alias("node"), "label", "old")
         )
-        jumped = (
+        ckpt = cache.checkpoint(
             stepped.alias("s")
             .join(
                 stepped.select(
@@ -682,11 +683,11 @@ def connected_components(
                 F.col("s.node").alias("node"),
                 F.coalesce("jlab", F.col("s.label")).alias("label"),
                 F.col("s.old").alias("old"),
-            )
-            .localCheckpoint()
+            ),
+            supersedes=ckpt,
         )
-        changed = jumped.filter(F.col("label") != F.col("old")).count()
-        labels = jumped.select("node", "label")
+        changed = ckpt.filter(F.col("label") != F.col("old")).count()
+        labels = ckpt.select("node", "label")
         if changed == 0:
             break
     return labels.select("node", F.col("label").alias("cluster_id"))

@@ -14,7 +14,7 @@ formulation lowered to DataFrame ops):
 - ``dangling``: one slim aggregate over rank rows without out-edges,
   attached back as a 1-row constant (broadcast of a single row — the
   whitelisted constant-attach pattern, a map in disguise).
-- lineage is cut per round with ``localCheckpoint`` (the connected-
+- lineage is cut per round with ``cache.checkpoint`` (the connected-
   components pattern) so the plan does not double per iteration.
 
 Integer exactness contract (the repo-wide oracle discipline): ranks are
@@ -82,10 +82,8 @@ def pagerank(
     nd = nodes.select(F.col(node_col).alias("node"))
     deg = cache.track(e.groupBy("u").agg(F.count("*").alias("deg")))
     n1 = nd.agg(F.count("*").alias("n"))  # 1-row constant attach
-    ranks = (
-        nd.crossJoin(n1)
-        .select("node", F.expr(f"{scale} DIV n").alias("pr"))
-        .localCheckpoint()
+    ranks = cache.checkpoint(
+        nd.crossJoin(n1).select("node", F.expr(f"{scale} DIV n").alias("pr"))
     )
     for _ in range(iters):
         dang = (
@@ -99,7 +97,7 @@ def pagerank(
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum(F.expr("pr DIV deg")).alias("recv"))
         )
-        ranks = (
+        ranks = cache.checkpoint(
             nd.crossJoin(n1)
             .crossJoin(dang)
             .join(contrib, "node", "left")
@@ -109,8 +107,8 @@ def pagerank(
                     f"(15 * ({scale} DIV n)) DIV 100"
                     " + (85 * (coalesce(recv, 0) + dang DIV n)) DIV 100"
                 ).alias("pr"),
-            )
-            .localCheckpoint()
+            ),
+            supersedes=ranks,
         )
     return ranks
 
@@ -229,15 +227,14 @@ def label_propagation(
     Scale: per round ONE equi-join of the slim (node, label) relation
     onto the edge list + one (node, label) groupBy with map-side
     combine — int64 pairs only, payloads never enter;
-    ``localCheckpoint`` cuts lineage per round (the ``pagerank``
+    ``cache.checkpoint`` cuts lineage per round (the ``pagerank``
     pattern). Returns (node, community)."""
     e = cache.track(
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
     )
-    labels = (
+    labels = cache.checkpoint(
         nodes.select(F.col(node_col).alias("node"))
         .withColumn("lab", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(int(iters)):
         votes = (
@@ -252,12 +249,11 @@ def label_propagation(
             )
             .select("node", F.col("__best.lab").alias("new_lab"))
         )
-        labels = (
-            labels.join(votes, "node", "left")
-            .select(
+        labels = cache.checkpoint(
+            labels.join(votes, "node", "left").select(
                 "node",
                 F.coalesce(F.col("new_lab"), F.col("lab")).alias("lab"),
-            )
-            .localCheckpoint()
+            ),
+            supersedes=labels,
         )
     return labels.select("node", F.col("lab").alias("community"))

@@ -1,14 +1,18 @@
 """The Spark extraction pipeline (SURVEY.md §3 'Our Spark lifecycle').
 
 Dataflow (all relational glue is Catalyst-optimizable DataFrame ops; all
-pixel work lives in ONE Arrow-batched ``mapInPandas`` UDF):
+pixel work lives in ONE Arrow-batched ``mapInArrow`` UDF):
 
     documents(doc_id, spans)
       → explode(spans)                         [generate, narrow]
       ├─ kind='text'  → vectorized normalizer  [regexp_replace/trim — JVM]
-      └─ kind='media' → join media on media_ref [left join; broadcast when
-                         the media side is small, else shuffle join + AQE]
-                      → mapInPandas(ocr_udf)    [det→cls→rec→layout, Arrow]
+      └─ kind='media' → group span requests per payload (base_ref), then
+                        attach the payload once per group
+                                                [broadcast when the media
+                                                 side is small, else a
+                                                 co-partitioned join]
+                      → mapInArrow(ocr_udf)     [det→cls→rec→layout once
+                                                 per distinct payload page]
       → union                                   [no shuffle]
       → groupBy(doc_id) reassembly              [salted two-phase when docs
                                                  are media-heavy (north_rule)]
@@ -50,11 +54,16 @@ STAGE_KEYS = (
 
 def make_stage_metrics(spark: SparkSession) -> dict:
     """Create the K5 stage-timing accumulators. Pass the dict to
-    ``extract_documents``/``ocr_media_spans``; executors add per-span
-    stage wall-ms, the driver reads totals after any action via
+    ``extract_documents``/``ocr_media_spans``; executors add per-stage
+    wall-ms, the driver reads totals after any action via
     ``snapshot_stage_metrics``. Accumulators are the Spark-native analog
     of the reference's process-global AutoLogger — run-scoped, crossing
     executor boundaries for free.
+
+    Units: ``*_ms`` is added once per COMPUTED page — the OCR UDF answers
+    every request for one (payload, page) from one run — while
+    ``ocr_spans`` counts ANSWERED span requests; so ``*_ms / ocr_spans``
+    is the amortized cost per span, not the cost of one OCR run.
 
     Semantics: AT-LEAST-ONCE, not exact. Spark guarantees exactly-once
     accumulator application only for updates inside actions; these are
@@ -79,7 +88,6 @@ def _ocr_one(
     cfg: PPOCRConfig,
     page: int | None = None,
     from_base64: bool = False,
-    decode_cache: dict | None = None,
 ) -> dict:
     """OCR one media payload → result dict. Total function: every failure
     maps to a status code (cpp/include/task.h:13-61 taxonomy).
@@ -120,13 +128,7 @@ def _ocr_one(
         return {**empty, "code": int(no_content)}
     data = bytes(content)
     t0 = perf_counter()
-    # decode_cache (grouped co-partitioned path): all requests of one UDF
-    # row share one payload, so each page decodes once per group — the
-    # decoded page is read-only downstream (det/crop/cls never mutate it)
-    cached = decode_cache.get(page) if decode_cache is not None else None
-    if cached is not None:
-        img = cached
-    elif is_pdf(data):
+    if is_pdf(data):
         try:
             img = decode_pdf_page(data, page if page is not None else 1)
         except PdfError:
@@ -139,8 +141,6 @@ def _ocr_one(
             img = to_gray(decode(data))
         except PngError:
             return {**empty, "code": int(bad_image)}
-    if decode_cache is not None and cached is None:
-        decode_cache[page] = img
     stage_ms["decode_ms"] = (perf_counter() - t0) * 1e3
     if img.size == 0:
         return {
@@ -230,12 +230,40 @@ def _ocr_one(
     }
 
 
-def _arrow_out_type():
-    """Arrow struct of one OCR result row — shared by the per-span and
-    grouped UDFs (must stay in sync with OCR_RESULT_SCHEMA)."""
+#: fields of an ``_ocr_one`` result that become output columns
+_RESULT_FIELDS = (
+    "code", "text", "boxes", "texts", "scores", "cls_labels", "cls_scores",
+    "ends",
+)
+
+
+def make_grouped_ocr_udf(cfg: PPOCRConfig, metrics: dict | None = None):
+    """The OCR UDF: an Arrow-batch generator for ``mapInArrow``, shared by
+    every media path (broadcast, co-partitioned, colocated) and the
+    request loop. Each input row carries ONE payload (``content``) plus
+    the requests addressing it (``reqs``: doc_id/offset/media_ref/page
+    structs, plus ``src_b64`` on the request path); it yields one output
+    row per request (OCR_RESULT_SCHEMA).
+
+    Requests for the same page of one payload are answered from ONE
+    ``_ocr_one`` run. ``_ocr_one`` is a pure function of (content, cfg,
+    page, from_base64), so the reuse is output-identical by construction,
+    and a payload that k spans reference costs one det→cls→rec→layout per
+    distinct page instead of k. A group is one input row, never split
+    across Arrow batches, so the output does not depend on batch size.
+
+    cfg travels by closure (the broadcast analog of the reference's
+    one-time engine init, cpp/src/task.cpp:243-250 — the glyph 'model
+    weights' rebuild deterministically per executor and are
+    process-cached). ``metrics`` (from ``make_stage_metrics``) is added to
+    once per batch.
+
+    mapInArrow, not mapInPandas: the input carries multi-MB binary image
+    payloads, and pandas conversion would copy every payload into Python
+    object arrays twice per batch."""
     import pyarrow as pa
 
-    return pa.struct(
+    out_type = pa.struct(
         [
             ("doc_id", pa.string()),
             ("offset", pa.int32()),
@@ -251,114 +279,31 @@ def _arrow_out_type():
         ]
     )
 
-
-def make_ocr_udf(cfg: PPOCRConfig, metrics: dict | None = None):
-    """Arrow-batch generator for ``mapInArrow``; cfg travels by closure
-    (the broadcast analog of the reference's one-time engine init,
-    cpp/src/task.cpp:243-250 — the glyph 'model weights' rebuild
-    deterministically per executor and are process-cached).
-
-    ``metrics`` (from ``make_stage_metrics``): K5 per-stage timing
-    accumulators, added to once per batch (negligible overhead vs the
-    multi-ms spans being timed).
-
-    mapInArrow, not mapInPandas: the input carries multi-MB binary image
-    payloads, and pandas conversion would copy every payload into Python
-    object arrays twice per batch."""
-    import pyarrow as pa
-
-    out_type = _arrow_out_type()
-
     def ocr_udf(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            offsets = batch.column("offset").to_pylist()
-            refs = batch.column("media_ref").to_pylist()
-            contents = batch.column("content")
-            pages = (
-                batch.column("page").to_pylist()
-                if "page" in batch.schema.names
-                else [None] * batch.num_rows
-            )
-            b64s = (
-                batch.column("src_b64").to_pylist()
-                if "src_b64" in batch.schema.names
-                else [False] * batch.num_rows
-            )
             totals = dict.fromkeys(STAGE_KEYS, 0.0)
             rows = []
-            for i in range(batch.num_rows):
-                c = contents[i].as_py() if contents[i].is_valid else None
-                r = _ocr_one(c, cfg, page=pages[i], from_base64=bool(b64s[i]))
-                if metrics is not None:
-                    for k, v in r["stage_ms"].items():
-                        totals[k] += v
-                    totals["ocr_spans"] += 1
-                rows.append(
-                    {
-                        "doc_id": doc_ids[i],
-                        "offset": offsets[i],
-                        "media_ref": refs[i],
-                        "code": r["code"],
-                        "text": r["text"],
-                        "boxes": r["boxes"],
-                        "texts": r["texts"],
-                        "scores": r["scores"],
-                        "cls_labels": r["cls_labels"],
-                        "cls_scores": r["cls_scores"],
-                        "ends": r["ends"],
-                    }
-                )
-            if metrics is not None:
-                for k, v in totals.items():
-                    if v:
-                        metrics[k].add(v)
-            arr = pa.array(rows, type=out_type)
-            yield pa.RecordBatch.from_struct_array(arr)
-
-    return ocr_udf
-
-
-def make_grouped_ocr_udf(cfg: PPOCRConfig, metrics: dict | None = None):
-    """Grouped variant of the OCR UDF for the co-partitioned (non-
-    broadcast) path: each input row carries ONE media payload plus the
-    list of span requests addressing it (reqs: doc_id/offset/media_ref/
-    page structs) — the payload is decoded against many spans without
-    ever being duplicated per span row. Output rows are identical to
-    ``make_ocr_udf``'s."""
-    import pyarrow as pa
-
-    out_type = _arrow_out_type()
-
-    def ocr_udf(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            reqs_col = batch.column("reqs").to_pylist()
-            contents = batch.column("content")
-            totals = dict.fromkeys(STAGE_KEYS, 0.0)
-            rows = []
-            for i in range(batch.num_rows):
-                c = contents[i].as_py() if contents[i].is_valid else None
-                page_cache: dict = {}
-                for req in reqs_col[i]:
-                    r = _ocr_one(c, cfg, page=req["page"],
-                                 decode_cache=page_cache)
-                    if metrics is not None:
+            for reqs, content in zip(
+                batch.column("reqs").to_pylist(), batch.column("content")
+            ):
+                c = content.as_py()
+                memo: dict = {}
+                for req in reqs:
+                    key = (req["page"], bool(req.get("src_b64")))
+                    r = memo.get(key)
+                    if r is None:
+                        r = memo[key] = _ocr_one(
+                            c, cfg, page=key[0], from_base64=key[1]
+                        )
                         for k, v in r["stage_ms"].items():
                             totals[k] += v
-                        totals["ocr_spans"] += 1
+                    totals["ocr_spans"] += 1
                     rows.append(
                         {
                             "doc_id": req["doc_id"],
                             "offset": req["offset"],
                             "media_ref": req["media_ref"],
-                            "code": r["code"],
-                            "text": r["text"],
-                            "boxes": r["boxes"],
-                            "texts": r["texts"],
-                            "scores": r["scores"],
-                            "cls_labels": r["cls_labels"],
-                            "cls_scores": r["cls_scores"],
-                            "ends": r["ends"],
+                            **{k: r[k] for k in _RESULT_FIELDS},
                         }
                     )
             if metrics is not None:
@@ -442,6 +387,14 @@ def media_span_ids(spans: DataFrame) -> DataFrame:
     )
 
 
+def _requests():
+    """Aggregate of one payload's span requests — the ``reqs`` column the
+    OCR UDF reads."""
+    return F.collect_list(
+        F.struct("doc_id", "offset", "media_ref", "page")
+    ).alias("reqs")
+
+
 # media-broadcast budget for ocr_media_spans' auto path: the blob table
 # rides whole to every executor below this; above it the grouped
 # co-partitioned join keeps blobs sharded (within 1.08x of broadcast at
@@ -456,10 +409,11 @@ def ocr_media_spans(
     broadcast_media: bool | None = None,
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Media branch: resolve media_ref → content (left join keeps missing
-    refs → PATH_NOT_EXIST), then the OCR UDF. ``broadcast_media=None``
-    auto-broadcasts when the media plan is below Spark's threshold (AQE
-    decides); pass True/False to force."""
+    """Media branch: group the span requests per payload, attach the
+    payload (left join keeps missing refs → PATH_NOT_EXIST), then the OCR
+    UDF, which runs once per distinct payload page. ``broadcast_media=None``
+    broadcasts when the media plan's size estimate is within
+    ``_BROADCAST_MEDIA_BYTES``; pass True/False to force."""
     m = media.select(F.col("media_ref").alias("base_ref"), "content")
     ids = media_span_ids(spans)
     par = spans.sparkSession.sparkContext.defaultParallelism
@@ -469,20 +423,19 @@ def ocr_media_spans(
         # pattern) — a small media table rides to executors whole, a
         # corpus-scale blob table takes the grouped co-partitioned path.
         # `if broadcast_media:` alone silently made None behave as False.
-        from ppocr_spark.cache import plan_size_bytes
-
         broadcast_media = (
-            plan_size_bytes(m, default=1 << 62) <= _BROADCAST_MEDIA_BYTES
+            cache.plan_size_bytes(m, default=1 << 62)
+            <= _BROADCAST_MEDIA_BYTES
         )
     if broadcast_media:
         # EXPLICIT repartition before the heavy UDF: a small parquet scan
         # yields 1-2 input partitions and would serialize all OCR work onto
         # 1-2 cores. COST-ORDERED waves: range-partition the slim span rows
         # by payload byte size DESC (size broadcast-joined from a slim
-        # (base_ref, length) projection — per-span kernel cost tracks page
+        # (base_ref, length) projection — per-page kernel cost tracks page
         # pixels, which tracks blob bytes), so the heaviest tasks schedule
         # first and the in-stage straggler tail is made of the cheapest
-        # tasks. 5 waves per core: per-span cost varies ~3x with page size,
+        # tasks. 5 waves per core: per-page cost varies ~3x with page size,
         # and coarse 2-wave partitioning leaves the final wave a straggler
         # tail (22% wall at 32 cores). Cost-ordering the waves beat plain
         # round-robin by ~6% wall in every interleaved A/B pair (12800
@@ -492,44 +445,43 @@ def ocr_media_spans(
             F.col("media_ref").alias("base_ref"),
             F.length("content").alias("__blob_len"),
         )
-        ids = (
+        grouped = (
             ids.join(F.broadcast(sizes), "base_ref", "left")
             .repartitionByRange(
                 max(par * 5, cfg.shuffle_partitions),
-                F.desc("__blob_len"), "base_ref", "doc_id", "offset",
+                F.desc("__blob_len"), "base_ref",
             )
+            # the range exchange already clusters rows by (size, base_ref),
+            # so this aggregate plans with no further exchange
+            .groupBy("__blob_len", "base_ref")
+            .agg(_requests())
             .drop("__blob_len")
+            # broadcast join AFTER the shuffle: only the slim request rows
+            # move; the payload attaches in place, once per group
+            .join(F.broadcast(m), "base_ref", "left")
         )
-        # broadcast join AFTER the shuffle: only the slim (doc_id, offset,
-        # media_ref) rows move; the image payload attaches in place
-        req = ids.join(F.broadcast(m), "base_ref", "left").drop("base_ref")
-        return req.mapInArrow(
-            make_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA
+    else:
+        # media too big to broadcast (the 100 TB path): GROUP the slim
+        # span rows per base_ref BEFORE the payload join, so a PDF with 50
+        # page spans ships its blob once instead of 50 times (the
+        # per-partition payload-cache design, SCALE.md §3b). Both sides are
+        # EXPLICITLY hash-partitioned on base_ref with the same count, so
+        # (a) the join needs no further exchange — the payload moves
+        # exactly once — and (b) AQE cannot coalesce the slim grouped side
+        # down to a handful of partitions and serialize the OCR stage (user
+        # repartitions pin the count).
+        n_part = max(par * 4, cfg.shuffle_partitions)
+        grouped = (
+            ids.groupBy("base_ref")
+            .agg(_requests())
+            .repartition(n_part, "base_ref")
+            .join(m.repartition(n_part, "base_ref"), "base_ref", "left")
         )
-    # media too big to broadcast (the 100 TB path): GROUP the slim span
-    # rows per base_ref BEFORE the payload join, so ONE payload row serves
-    # every page/span addressing that media — a PDF with 50 page spans
-    # ships its blob once instead of 50 times (the per-partition
-    # payload-cache design, SCALE.md §3b). Both sides are EXPLICITLY
-    # hash-partitioned on base_ref with the same count, so (a) the join
-    # needs no further exchange — the payload moves exactly once — and
-    # (b) AQE cannot coalesce the slim grouped side down to a handful of
-    # partitions and serialize the OCR stage (user repartitions pin the
-    # count). Caveat: all spans of one media run in one task; media
-    # referenced by very many spans should take the broadcast path.
-    n_part = max(par * 4, cfg.shuffle_partitions)
-    grouped = (
-        ids.groupBy("base_ref")
-        .agg(
-            F.collect_list(
-                F.struct("doc_id", "offset", "media_ref", "page")
-            ).alias("reqs")
-        )
-        .repartition(n_part, "base_ref")
-        .join(m.repartition(n_part, "base_ref"), "base_ref", "left")
-        .drop("base_ref")
-    )
-    return grouped.mapInArrow(
+    # every path hands the UDF one row per payload, which runs OCR once per
+    # distinct page: all spans of one payload run in one task, but a
+    # payload that very many spans reference costs one OCR per page, not
+    # one per span
+    return grouped.drop("base_ref").mapInArrow(
         make_grouped_ocr_udf(cfg, metrics), schema=OCR_RESULT_SCHEMA
     )
 
@@ -557,11 +509,7 @@ def ocr_media_spans_colocated(
     """
     grouped = (
         media_spans.groupBy("base_ref")
-        .agg(
-            F.collect_list(
-                F.struct("doc_id", "offset", "media_ref", "page")
-            ).alias("reqs")
-        )
+        .agg(_requests())
         .join(media, "base_ref", "left")
         .drop("base_ref")
     )
@@ -631,15 +579,21 @@ def ocr_requests(
     ).select("req_id", "task_kind", "code", F.lit("").alias("text"))
 
     def run_ocr(df: DataFrame, kind: str) -> DataFrame:
+        # one single-request group per row; src_b64 rides in the request
         ocr_in = df.select(
-            F.col("req_id").alias("doc_id"),
-            F.lit(0).alias("offset"),
-            F.col("payload").alias("media_ref"),
+            F.array(
+                F.struct(
+                    F.col("req_id").alias("doc_id"),
+                    F.lit(0).alias("offset"),
+                    F.col("payload").alias("media_ref"),
+                    F.lit(None).cast("int").alias("page"),
+                    F.lit(kind == "base64").alias("src_b64"),
+                )
+            ).alias("reqs"),
             "content",
-            F.lit(kind == "base64").alias("src_b64"),
         )
         return ocr_in.mapInArrow(
-            make_ocr_udf(cfg), schema=OCR_RESULT_SCHEMA
+            make_grouped_ocr_udf(cfg), schema=OCR_RESULT_SCHEMA
         ).select(
             F.col("doc_id").alias("req_id"),
             F.lit(kind).alias("task_kind"),
@@ -808,11 +762,17 @@ def build_session(
 ) -> SparkSession:
     """local[N] session tuned per SURVEY.md §4: AQE on (runtime shuffle
     re-plan + skew-join splitting), bounded Arrow batches (the engine's
-    inference-batch analog), shuffle partitions sized to the core count."""
+    inference-batch analog), shuffle partitions sized to the core count.
+    N: ``cores``, else ``$SPARK_GRAFT_CPUS``, else the process's CPU
+    affinity set."""
     import os
 
     cfg = cfg or PPOCRConfig()
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default: the CPUs this process may run on — more workers than that
+    # only time-slice the same cores
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     # worker-process memory hygiene: MB-sized numpy temporaries must reuse
     # heap instead of mmap/munmap per call (kernel page-zeroing serializes
     # across 32 workers and caps scaling), and BLAS must not oversubscribe

@@ -65,10 +65,37 @@ class TestCacheHygiene:
         # small source, default threshold: pass-through, nothing cached
         out = cache.track_if_large(docs, derived)
         assert out is derived
+        assert not derived.is_cached
         assert _n_cached(spark) == 0
         # threshold 0: persists and registers for release
         out2 = cache.track_if_large(docs, derived, threshold_bytes=0)
         out2.collect()
         assert _n_cached(spark) == 1
+        cache.release_all()
+        assert _n_cached(spark) == 0
+
+    def test_plan_size_bytes_reads_the_estimate(self, spark, sf_dir):
+        """The optimizer estimate comes back as a number, not the
+        stats-unavailable default (pyspark hands ``sizeInBytes`` over as a
+        Python int, which has no ``toString``)."""
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        est = cache.plan_size_bytes(docs)
+        assert 0 < est < 1 << 62
+
+    def test_checkpoint_loops_release_their_blocks(self, spark):
+        """Connected components checkpoints every round: superseded rounds
+        are freed as the loop goes, the last one by release_all."""
+        from ppocr_spark.functions.dedup import connected_components
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4), (10, 11)], "a long, b long"
+        )
+        got = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components(pairs).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+        # the edge table and the final round's checkpoint
+        assert _n_cached(spark) <= 2
         cache.release_all()
         assert _n_cached(spark) == 0

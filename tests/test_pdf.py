@@ -109,6 +109,74 @@ class TestOcrDispatch:
         )
 
 
+class TestGroupedOcrUdf:
+    """The OCR UDF answers every request for one (payload, page) from one
+    ``_ocr_one`` run, and each answer equals a direct call."""
+
+    def test_one_ocr_per_distinct_page(self, monkeypatch):
+        import pyarrow as pa
+
+        from ppocr_spark import pipeline
+
+        cfg = PPOCRConfig()
+        img1, _ = render_page(["alpha beta gamma"])
+        img2, _ = render_page(["delta epsilon"])
+        blob = encode_pdf([img1, img2])
+        pages = [1, 2, 1, 1, 2]
+        reqs_type = pa.list_(
+            pa.struct(
+                [
+                    ("doc_id", pa.string()),
+                    ("offset", pa.int32()),
+                    ("media_ref", pa.string()),
+                    ("page", pa.int32()),
+                ]
+            )
+        )
+        payload_reqs = [
+            {"doc_id": f"d{i}", "offset": i, "media_ref": f"b.pdf#page={p}",
+             "page": p}
+            for i, p in enumerate(pages)
+        ]
+        missing_req = {"doc_id": "dx", "offset": 0, "media_ref": "gone",
+                       "page": None}
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pa.array([payload_reqs, [missing_req]], type=reqs_type),
+                pa.array([blob, None], type=pa.binary()),
+            ],
+            names=["reqs", "content"],
+        )
+
+        calls = []
+        real = pipeline._ocr_one
+
+        def counting(content, *args, **kwargs):
+            calls.append(content is not None)
+            return real(content, *args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "_ocr_one", counting)
+        udf = pipeline.make_grouped_ocr_udf(cfg)
+        out_batches = list(udf(iter([batch])))
+        out = [r for b in out_batches for r in b.to_pylist()]
+
+        # one OCR per distinct payload page, one for the missing payload
+        assert calls.count(True) == 2
+        assert calls.count(False) == 1
+        assert len(out) == len(pages) + 1
+        # each row equals a direct _ocr_one call, typed like the output
+        out_type = pa.struct(list(out_batches[0].schema))
+        for req, content, row in zip(
+            payload_reqs + [missing_req], [blob] * len(pages) + [None], out
+        ):
+            direct = real(content, cfg, page=req["page"])
+            want = {k: req[k] for k in ("doc_id", "offset", "media_ref")}
+            want.update((k, direct[k]) for k in pipeline._RESULT_FIELDS)
+            assert row == pa.array([want], type=out_type).to_pylist()[0]
+        assert out[0]["code"] == int(StatusCode.OK)
+        assert out[-1]["code"] == int(StatusCode.PATH_NOT_EXIST)
+
+
 class TestPropertyRoundtrip:
     def test_hypothesis_roundtrip(self):
         from hypothesis import given, settings

@@ -98,6 +98,32 @@ def test_copartitioned_path_matches_broadcast(frames):
             ), doc_id
 
 
+def test_output_independent_of_arrow_batch_size(spark, frames):
+    """One Arrow record per batch and 64 per batch give identical spans on
+    both media paths: a payload's requests travel in one UDF row, so the
+    per-page reuse never depends on where a batch boundary falls."""
+    docs, media, _ = frames
+    cfg = PPOCRConfig(cls=True, use_angle_cls=True)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    runs = {}
+    try:
+        for rows in ("1", "64"):
+            spark.conf.set(key, rows)
+            for bc in (True, False):
+                runs[rows, bc] = sorted(
+                    (r["doc_id"], [tuple(x) for x in r["spans"]])
+                    for r in extract_documents(
+                        docs, media, cfg, broadcast_media=bc
+                    ).collect()
+                )
+    finally:
+        spark.conf.set(key, prev)
+    for bc in (True, False):
+        assert runs["1", bc] == runs["64", bc]
+    assert runs["64", True] == runs["64", False]
+
+
 def test_html_main_mode_span_equality(spark, small_corpus):
     """html_strip='main': authored-HTML text spans reduce to their
     authored main content; plain spans obey the min-words rule; media

@@ -19,6 +19,21 @@ def _plan(df) -> str:
     )
 
 
+def _nodes_below(plan: str, node: str) -> list[str]:
+    """Operator names in the formatted plan's tree strictly below the
+    first operator named ``node`` (children print right of their parent)."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    names = [line.lstrip(" :+-") for line in tree]
+    cols = [len(line) - len(name) for line, name in zip(tree, names)]
+    i = next(k for k, name in enumerate(names) if name.startswith(node))
+    below = []
+    for name, c in zip(names[i + 1:], cols[i + 1:]):
+        if c <= cols[i]:
+            break
+        below.append(name)
+    return below
+
+
 from contextlib import contextmanager  # noqa: E402
 
 
@@ -81,6 +96,27 @@ class TestPlans:
         assert "rangepartitioning" in plan.lower()
         assert "__blob_len" in plan
         assert "BroadcastHashJoin" in plan  # media side broadcast
+        # the range exchange is the only shuffle under the OCR UDF: the
+        # per-payload request grouping reuses its clustering
+        below = _nodes_below(plan, "MapInArrow")
+        assert len([n for n in below if n.startswith("Exchange")]) == 1, below
+        assert any(n.startswith("ObjectHashAggregate") for n in below)
+
+    def test_ocr_media_auto_broadcasts_small_media(self, spark, small_corpus):
+        """broadcast_media=None decides by the media plan's size estimate:
+        a small media table takes the broadcast path with cost-ordered
+        waves (the range exchange)."""
+        from ppocr_spark.config import PPOCRConfig
+        from ppocr_spark.pipeline import explode_spans, ocr_media_spans
+
+        docs = spark.read.parquet(f"{small_corpus}/documents_spans.parquet")
+        media = spark.read.parquet(f"{small_corpus}/media.parquet")
+        plan = _plan(
+            ocr_media_spans(
+                explode_spans(docs), media, PPOCRConfig(), broadcast_media=None
+            )
+        )
+        assert "rangepartitioning" in plan.lower()
 
     def test_dedup_exact_partial_aggregation(self, spark, sf_dir):
         # hash aggregate must have a map-side partial pass (two HashAggregates)
